@@ -648,6 +648,36 @@ def test_packed_obs_columnar_lookup_equals_v1(spark):
     assert not any(dense_flags)
 
 
+def test_packed_obs_columnar_extra_column_does_not_leak(spark, tmp_path):
+    """A persisted columnar packed dim may carry columns beyond the packed
+    schema; packed_obs_lookup projects them away before the broadcast, so
+    the output schema and rows equal those of the plain dim."""
+    from tests.conftest import SF_SMALL as sf
+    from tiff_enrichment_pipeline_spark.operators.knn_join import (
+        packed_obs_lookup,
+    )
+
+    packed = geotables.weather_observations_packed(spark, sf)
+    path = str(tmp_path / "packed_extra")
+    packed.withColumn("ingest_note", F.lit("v2")).write.parquet(path)
+    persisted = spark.read.parquet(path)
+    probe = (
+        geotables.images_geo(spark, sf)
+        .select(
+            "image_id",
+            F.to_date("captured_at").alias("weather_historical_date"),
+        )
+        .withColumn("station_id", (F.col("image_id") % 100 + 1).cast("long"))
+    )
+    want = packed_obs_lookup(probe, packed)
+    got = packed_obs_lookup(probe, persisted)
+    assert "ingest_note" not in got.columns
+    assert got.columns == want.columns
+    a = {r["image_id"]: tuple(r) for r in want.collect()}
+    b = {r["image_id"]: tuple(r) for r in got.collect()}
+    assert a == b and len(a) > 0
+
+
 def test_dated_weather_packed_obs_param(spark):
     """nearest_station_dated(packed_obs=...) — the build-once/reuse form
     — must equal the inline observations= form, and the API must reject
@@ -729,20 +759,21 @@ def test_enrich_packed_obs_equals_row_obs(spark):
     assert a == b and len(a) > 0
 
 def test_knn_kernel_exact_ties_and_f32_fallback():
-    """Kernel-level pins for the r7 selection rewrite (knn_join.py):
+    """Kernel-level pins for the production kNN kernel (build_knn_index +
+    topk_indexed_np, knn_join.py):
 
     1. Exact-tie ordering: co-located stations (identical coordinates,
        distinct ids) must be returned in ascending-id order with NO id
        skipped — the pre-r7 argpartition selection could drop a tied id
        at the partition boundary (top-5 of ten exact ties came back
        800,802,803,804,805).
-    2. The fp32-prefilter fallback (_fallback_f32, far-from-coverage
+    2. The fp32-prefilter fallback (_fallback_f32_scan, far-from-coverage
        probes) must equal a pure-fp64 lexicographic brute force on both
        winners and (to 1 ulp) chord² values.
     """
     from tiff_enrichment_pipeline_spark.operators.knn_join import (
-        build_cell_candidates,
-        topk_bucketed_np,
+        build_knn_index,
+        topk_indexed_np,
     )
 
     rng = np.random.default_rng(7)
@@ -756,9 +787,7 @@ def test_knn_kernel_exact_ties_and_f32_fallback():
         [np.cos(rp) * np.cos(rl), np.cos(rp) * np.sin(rl), np.sin(rp)],
         axis=1,
     )
-    cand = build_cell_candidates(s_lat, s_lon, res=10, ring=2)
-
-    # probes: half inside coverage (bucketed path), half far away (fp32
+    # probes: half inside coverage (indexed path), half far away (fp32
     # fallback path)
     lat_v = np.concatenate(
         [50.8 + rng.random(300) * 1.0, -30 + rng.random(300) * 40]
@@ -767,8 +796,9 @@ def test_knn_kernel_exact_ties_and_f32_fallback():
         [3.5 + rng.random(300) * 1.0, -170 + rng.random(300) * 100]
     )
     for k in (1, 3, 5):
-        idx, d2 = topk_bucketed_np(
-            lat_v, lon_v, s_xyz, s_ids, cand, k, res=10, ring=2
+        index, res_f = build_knn_index(s_lat, s_lon, s_xyz, k, res=10, ring=2)
+        idx, d2 = topk_indexed_np(
+            lat_v, lon_v, s_xyz, s_ids, index, k, res_f
         )
         p = np.stack(
             [

@@ -23,6 +23,7 @@ from tiff_enrichment_pipeline_spark.operators.knn_join import (
     _chord2_to_m,
     _indexed_payload_df,
     _safe_idx,
+    _station_dim,
     build_knn_index,
     topk_indexed_np,
 )
@@ -44,16 +45,7 @@ def fused_station_dem_lookup(
     ring of the certified-exact 1-NN (EnrichConfig.knn_res/knn_ring) —
     results are exact for ANY setting; they only trade candidate-set size
     against fallback frequency."""
-    st_rows = stations.collect()
-    # id-ascending layout → kernel argmin fast path (see knn_join.py)
-    st_rows.sort(key=lambda r: r["station_id"])
-    s_lat = np.array([r["st_lat"] for r in st_rows], dtype=np.float64)
-    s_lon = np.array([r["st_lon"] for r in st_rows], dtype=np.float64)
-    s_ids = np.array([r["station_id"] for r in st_rows], dtype=np.int64)
-    rp, rl = np.radians(s_lat), np.radians(s_lon)
-    s_xyz = np.stack(
-        [np.cos(rp) * np.cos(rl), np.cos(rp) * np.sin(rl), np.sin(rp)], axis=1
-    )
+    st_tbl, s_lat, s_lon, s_ids, s_xyz = _station_dim(stations)
     knn_index, knn_res_f = build_knn_index(
         s_lat, s_lon, s_xyz, 1, knn_res, knn_ring
     )
@@ -104,7 +96,7 @@ def fused_station_dem_lookup(
         return pd.DataFrame({"st_idx": st_idx, "d2": d2_out, "elevation": elev})
 
     spark = images.sparkSession
-    st_indexed = _indexed_payload_df(spark, stations, st_rows)
+    st_indexed = _indexed_payload_df(spark, stations, st_tbl)
     dem_meta = dem_tiles.select(
         "tile_x", "tile_y",
         F.col("source").alias("elevation_source"),
